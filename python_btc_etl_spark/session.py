@@ -13,6 +13,11 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
   comparable against the DuckDB oracle (UTC-naive timestamps).
 - Arrow enabled: every Pandas-UDF boundary (dedup/multimodal paths) moves
   columnar batches, not pickled rows.
+- Driver heap sized to the machine: ``spark.driver.memory`` is
+  ``$SPARK_DRIVER_MEMORY`` when set, else a quarter of physical RAM
+  (``os.sysconf``), floored at 1 GiB. The JVM's resident size runs well
+  past its heap (off-heap buffers, metaspace, Python workers beside it),
+  so a heap near RAM size gets the driver OOM-killed on a small machine.
 """
 
 from __future__ import annotations
@@ -22,6 +27,23 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+MIN_DRIVER_MEMORY_MB = 1024
+
+
+def physical_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def driver_memory(physical_bytes: int | None = None) -> str:
+    """The ``spark.driver.memory`` value: ``SPARK_DRIVER_MEMORY`` when set,
+    else a quarter of physical RAM in MiB, at least ``MIN_DRIVER_MEMORY_MB``."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    if physical_bytes is None:
+        physical_bytes = physical_memory_bytes()
+    return f"{max(MIN_DRIVER_MEMORY_MB, physical_bytes // 4 // 2**20)}m"
 
 
 def get_spark(
@@ -53,7 +75,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no

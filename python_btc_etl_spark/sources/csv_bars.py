@@ -176,8 +176,11 @@ def ingest_incremental(
     batch's new-file list, which must reach the reader anyway, ever
     materializes driver-side). Returns (n_new_files, n_rows_written),
     the row count taken from ``write_bars``'s in-flight Observation —
-    no second pass over the data.
+    no second pass over the data. A landing ``directory`` that does not
+    exist raises ``FileNotFoundError``; an empty one returns (0, 0).
     """
+    if not os.path.isdir(directory):
+        raise FileNotFoundError(f"landing directory not found: {directory}")
     all_files = _list_valid_files(directory)
     if not all_files:
         return 0, 0

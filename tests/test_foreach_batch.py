@@ -1,7 +1,8 @@
 """foreachBatch idempotent-sink tests: checkpoint replay of a
 micro-batch must not duplicate rows (the exactly-once property the
 reference's INSERT + Redis-mark sequence lacks, reference
-btc_etl.py:137-147)."""
+btc_etl.py:137-147). Inputs are the seeded ``bar_days`` files
+(tests/conftest.py)."""
 
 from __future__ import annotations
 
@@ -11,14 +12,12 @@ from pathlib import Path
 from python_btc_etl_spark.sources.csv_bars import BAR_SCHEMA, ingest_bars, transform_bars
 from python_btc_etl_spark.streaming.sinks import batch_partitioned_writer
 
-CORPUS = Path("/root/reference/dataset-test")
 
-
-def _stage(tmp: Path, names: list[str]) -> Path:
+def _stage(corpus: Path, tmp: Path, names: list[str]) -> Path:
     src = tmp / "incoming"
     src.mkdir(exist_ok=True)
     for n in names:
-        shutil.copy(CORPUS / n, src / n)
+        shutil.copy(corpus / n, src / n)
     return src
 
 
@@ -35,13 +34,13 @@ def _drain(spark, src: str, table: str, ckpt: str, per_trigger: int) -> None:
     q.awaitTermination()
 
 
-def test_foreach_batch_no_duplicates_across_drains(spark, tmp_path):
+def test_foreach_batch_no_duplicates_across_drains(spark, tmp_path, bar_days):
     files = [
         "btcusd-2012-01-21.csv",
         "btcusd-2012-01-22.csv",
         "btcusd-2012-01-23.csv",
     ]
-    src = _stage(tmp_path, files[:2])
+    src = _stage(bar_days, tmp_path, files[:2])
     table = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
 
@@ -57,16 +56,16 @@ def test_foreach_batch_no_duplicates_across_drains(spark, tmp_path):
     assert spark.read.parquet(table).count() == expected
 
     # a new file arrives → exactly one new batch partition
-    _stage(tmp_path, files)
+    _stage(bar_days, tmp_path, files)
     _drain(spark, str(src), table, ckpt, per_trigger=1)
     assert spark.read.parquet(table).count() == ingest_bars(spark, str(src)).count()
 
 
-def test_foreach_batch_replay_overwrites_not_appends(spark, tmp_path):
+def test_foreach_batch_replay_overwrites_not_appends(spark, tmp_path, bar_days):
     """Simulated replay: calling the writer twice with the SAME batch_id
     (what the checkpoint does after a crash mid-commit) must leave one
     copy of the rows, not two."""
-    src = _stage(tmp_path, ["btcusd-2012-01-21.csv"])
+    src = _stage(bar_days, tmp_path, ["btcusd-2012-01-21.csv"])
     table = str(tmp_path / "table")
     writer = batch_partitioned_writer(table)
     batch = ingest_bars(spark, str(src))

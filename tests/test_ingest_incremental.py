@@ -1,12 +1,14 @@
 """Batch idempotence (D1 parity): the ingestion-log anti-join gives
 file-level exactly-once across repeated batch runs — the relational
 replacement for the reference's Redis processed-files set
-(reference utils.py:24-36)."""
+(reference utils.py:24-36). Inputs are the seeded ``bar_days`` files
+(tests/conftest.py)."""
 
 from __future__ import annotations
 
 import shutil
-from pathlib import Path
+
+import pytest
 
 from python_btc_etl_spark.sources.csv_bars import (
     ingest_bars,
@@ -14,14 +16,12 @@ from python_btc_etl_spark.sources.csv_bars import (
     write_bars,
 )
 
-CORPUS = Path("/root/reference/dataset-test")
 
-
-def test_batch_ingest_idempotent(spark, tmp_path):
+def test_batch_ingest_idempotent(spark, tmp_path, bar_days):
     src = tmp_path / "in"
     src.mkdir()
     for n in ["btcusd-2012-03-01.csv", "btcusd-2012-03-02.csv"]:
-        shutil.copy(CORPUS / n, src / n)
+        shutil.copy(bar_days / n, src / n)
     table = str(tmp_path / "table")
     log = str(tmp_path / "log")
 
@@ -34,7 +34,7 @@ def test_batch_ingest_idempotent(spark, tmp_path):
     assert spark.read.parquet(table).count() == nr1
 
     # One new file arrives: only it is ingested.
-    shutil.copy(CORPUS / "btcusd-2012-03-03.csv", src / "btcusd-2012-03-03.csv")
+    shutil.copy(bar_days / "btcusd-2012-03-03.csv", src / "btcusd-2012-03-03.csv")
     nf3, nr3 = ingest_incremental(spark, str(src), table, log)
     assert nf3 == 1
     assert spark.read.parquet(table).count() == nr1 + nr3
@@ -55,11 +55,24 @@ def test_multimodal_decode_stub():
     assert f["band0"] == ord("a") * 3
 
 
-def test_write_bars_observed_metrics(spark, tmp_path):
+def test_write_bars_observed_metrics(spark, tmp_path, bar_days):
     """Observation metrics ride the write plan itself (no second scan):
     rows, distinct days, null-vwap count for the written batch."""
-    bars = ingest_bars(spark, str(CORPUS), [str(CORPUS / "btcusd-2012-01-21.csv")])
+    bars = ingest_bars(spark, str(bar_days), [str(bar_days / "btcusd-2012-01-21.csv")])
     metrics = write_bars(bars, str(tmp_path / "t"))
     assert metrics["n_rows"] == bars.count() > 0
     assert metrics["n_days"] == 1
     assert metrics["n_null_vwap"] == 0
+
+
+def test_ingest_incremental_missing_landing_dir_raises(spark, tmp_path):
+    """A mistyped landing path is an error, not an empty batch."""
+    missing = tmp_path / "no_such_dir"
+    with pytest.raises(FileNotFoundError, match="no_such_dir"):
+        ingest_incremental(spark, str(missing), str(tmp_path / "table"), str(tmp_path / "log"))
+
+
+def test_ingest_incremental_empty_landing_dir_is_noop(spark, tmp_path):
+    src = tmp_path / "in"
+    src.mkdir()
+    assert ingest_incremental(spark, str(src), str(tmp_path / "table"), str(tmp_path / "log")) == (0, 0)

@@ -14,11 +14,13 @@ the 1000×-scale problem.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 
 from python_btc_etl_spark import plans
+from python_btc_etl_spark.plans.ingest import CORPUS
 
 from .conftest import SF_SMALL
 
@@ -152,6 +154,7 @@ def test_range_frame_is_single_window_no_self_join(spark):
     assert "Join" not in plan, plan
 
 
+@pytest.mark.skipif(not os.path.isdir(CORPUS), reason=f"reference corpus {CORPUS} not present")
 def test_csv_scan_prunes_by_glob_and_schema(spark):
     """The reference-corpus CSV scan must carry the explicit schema (no
     inference pass) and the all-null filter must not block codegen."""

@@ -1,7 +1,8 @@
 """Streaming-path tests: checkpointed exactly-once ingest with
 incremental file arrival (the reference's watcher semantics,
 reference btc_etl.py:185-228, minus its partial-file and re-read
-races), and batch-equivalence of the streamed transform."""
+races), and batch-equivalence of the streamed transform. Bar inputs are
+the seeded ``bar_days`` files (tests/conftest.py)."""
 
 from __future__ import annotations
 
@@ -13,21 +14,19 @@ from pyspark.sql import functions as F
 from python_btc_etl_spark.sources.csv_bars import ingest_bars
 from python_btc_etl_spark.streaming.file_stream import stream_ingest_once
 
-CORPUS = Path("/root/reference/dataset-test")
 
-
-def _stage(tmp: Path, names: list[str]) -> Path:
+def _stage(corpus: Path, tmp: Path, names: list[str]) -> Path:
     src = tmp / "incoming"
     src.mkdir(exist_ok=True)
     for n in names:
-        shutil.copy(CORPUS / n, src / n)
+        shutil.copy(corpus / n, src / n)
     return src
 
 
-def test_stream_ingest_exactly_once_incremental(spark, tmp_path):
+def test_stream_ingest_exactly_once_incremental(spark, tmp_path, bar_days):
     files1 = ["btcusd-2012-01-21.csv", "btcusd-2012-01-22.csv"]
     files2 = ["btcusd-2012-01-23.csv"]
-    src = _stage(tmp_path, files1)
+    src = _stage(bar_days, tmp_path, files1)
     table = str(tmp_path / "bars_table")
     ckpt = str(tmp_path / "ckpt")
 
@@ -38,7 +37,7 @@ def test_stream_ingest_exactly_once_incremental(spark, tmp_path):
 
     # New file arrives; re-drain. Only the new file is processed (the
     # checkpoint file log replaces the reference's Redis seen-set).
-    _stage(tmp_path, files2)
+    _stage(bar_days, tmp_path, files2)
     stream_ingest_once(spark, str(src), table, ckpt)
     n2 = spark.read.parquet(table).count()
     batch_all = ingest_bars(spark, str(src)).count()
@@ -49,7 +48,7 @@ def test_stream_ingest_exactly_once_incremental(spark, tmp_path):
     assert spark.read.parquet(table).count() == batch_all
 
 
-def test_stream_ingest_daemon_picks_up_files_across_batches(spark, tmp_path):
+def test_stream_ingest_daemon_picks_up_files_across_batches(spark, tmp_path, bar_days):
     """The forever-watcher mode (reference btc_etl.py:185-198): start the
     processingTime-trigger daemon, drop files while it is LIVE, and check
     it ingests them across ≥2 micro-batches without restart; then stop
@@ -58,7 +57,7 @@ def test_stream_ingest_daemon_picks_up_files_across_batches(spark, tmp_path):
 
     from python_btc_etl_spark.streaming.file_stream import stream_ingest_daemon
 
-    src = _stage(tmp_path, ["btcusd-2012-01-21.csv"])
+    src = _stage(bar_days, tmp_path, ["btcusd-2012-01-21.csv"])
     table = str(tmp_path / "bars_table")
     ckpt = str(tmp_path / "ckpt")
 
@@ -71,7 +70,7 @@ def test_stream_ingest_daemon_picks_up_files_across_batches(spark, tmp_path):
             time.sleep(0.2)
         # Second file arrives while the daemon is live — a later
         # micro-batch must pick it up (no restart, no re-listing races).
-        _stage(tmp_path, ["btcusd-2012-01-22.csv"])
+        _stage(bar_days, tmp_path, ["btcusd-2012-01-22.csv"])
         expected = ingest_bars(spark, str(src)).count()
         while time.time() < deadline:
             try:
@@ -155,8 +154,8 @@ def test_stateful_lifetime_stats_across_microbatches(spark, tmp_path):
     assert expected.exceptAll(got).count() == 0
 
 
-def test_stream_transform_matches_batch(spark, tmp_path):
-    src = _stage(tmp_path, ["btcusd-2013-06-01.csv"])
+def test_stream_transform_matches_batch(spark, tmp_path, bar_days):
+    src = _stage(bar_days, tmp_path, ["btcusd-2013-06-01.csv"])
     table = str(tmp_path / "t2")
     ckpt = str(tmp_path / "c2")
     stream_ingest_once(spark, str(src), table, ckpt)
@@ -170,7 +169,7 @@ def test_stream_transform_matches_batch(spark, tmp_path):
     assert batch.exceptAll(streamed).count() == 0
 
 
-def test_agg_state_recovers_across_query_restart(spark, tmp_path):
+def test_agg_state_recovers_across_query_restart(spark, tmp_path, bar_days):
     """AGGREGATION STATE recovery, not just source offsets: drain batch A
     into a grouped count, STOP the query, deliver batch B (same grouping
     key, different file), and start a brand-new query on the same
@@ -186,7 +185,7 @@ def test_agg_state_recovers_across_query_restart(spark, tmp_path):
     b = tmp_path / "src" / "b"
     a.mkdir(parents=True)
     b.mkdir(parents=True)
-    shutil.copy(CORPUS / name, a / name)
+    shutil.copy(bar_days / name, a / name)
     src_glob = str(tmp_path / "src" / "*")
     ckpt = str(tmp_path / "ckpt")
 
@@ -217,7 +216,7 @@ def test_agg_state_recovers_across_query_restart(spark, tmp_path):
     assert got1 == per_file > 0
 
     # same-date file lands in a sibling dir → same aggregation key
-    shutil.copy(CORPUS / name, b / name)
+    shutil.copy(bar_days / name, b / name)
     drain()  # BRAND-NEW query object, same checkpoint
     got2 = spark.read.parquet(out).agg({"count": "max"}).collect()[0][0]
     assert got2 == 2 * per_file
