@@ -8,16 +8,19 @@ expression exists.
 
 Layout
 ------
-- ``session``     — tuned SparkSession factory (AQE, UTC, Arrow).
-- ``catalog``     — testdata table loading + temp-view registration.
-- ``sources``     — reference-parity OHLCV CSV source, parquet, streaming.
-- ``operators``   — OHLCV re-agg, as-of/range joins, dedup, similarity,
-                    text analysis, top-k, idempotent ingest.
-- ``functions``   — reusable column-expression builders (vectors, scalars).
+- ``session``     — tuned SparkSession factory (AQE, UTC, Arrow, heap
+                    sized to RAM, class-data-sharing archive).
+- ``catalog``     — testdata table loading, temp-view registration and
+                    the bounded plan cache.
+- ``sources``     — reference-parity OHLCV CSV ingest (``csv_bars``),
+                    file formats (``formats``) and Python data sources
+                    (``pyds``).
+- ``functions``   — reusable column-expression builders (text, vectors,
+                    multimodal).
 - ``plans``       — the query registry: every supported query as a
                     (Spark callable, DuckDB oracle SQL) pair.
-- ``streaming``   — Structured Streaming ingest & windowed aggregation.
-- ``multimodal``  — binary-column plumbing (decode stubs, metadata).
+- ``streaming``   — Structured Streaming ingest, windowed aggregation,
+                    stateful operators and sinks.
 """
 
 __version__ = "0.1.0"

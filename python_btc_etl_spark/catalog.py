@@ -182,22 +182,21 @@ def managed_cache(df: DataFrame) -> DataFrame:
         key = df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:  # pragma: no cover - plan introspection unavailable
         return df.cache()
-    cached = df.cache()
-    # Registration is locked (r14): plan construction now also happens
-    # from run_parallel driver threads, and the janitor's pop/evict
-    # sequence is not atomic under interleaving.
+    # Caching, registration and eviction hold one lock: plan construction
+    # also happens from run_parallel driver threads, and an unpersist
+    # outside it could drop the cache of a plan that another thread has
+    # just registered again.
     with _MANAGED_CACHES_LOCK:
+        cached = df.cache()
         if key in _MANAGED_CACHES:
             _MANAGED_CACHES.pop(key)  # refresh recency, same underlying entry
         _MANAGED_CACHES[key] = cached
-        evicted = []
         while len(_MANAGED_CACHES) > MANAGED_CACHE_KEEP:
-            evicted.append(_MANAGED_CACHES.pop(next(iter(_MANAGED_CACHES))))
-    for oldest in evicted:
-        try:
-            oldest.unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
+            oldest = _MANAGED_CACHES.pop(next(iter(_MANAGED_CACHES)))
+            try:
+                oldest.unpersist()
+            except Exception:  # pragma: no cover - session already stopped
+                pass
     return cached
 
 

@@ -177,7 +177,9 @@ def ingest_incremental(
     materializes driver-side). Returns (n_new_files, n_rows_written),
     the row count taken from ``write_bars``'s in-flight Observation —
     no second pass over the data. A landing ``directory`` that does not
-    exist raises ``FileNotFoundError``; an empty one returns (0, 0).
+    exist raises ``FileNotFoundError``; an empty one returns (0, 0). A
+    log that exists but cannot be read raises too, rather than ingesting
+    the whole corpus again.
     """
     if not os.path.isdir(directory):
         raise FileNotFoundError(f"landing directory not found: {directory}")
@@ -185,7 +187,7 @@ def ingest_incremental(
     if not all_files:
         return 0, 0
     candidates = spark.createDataFrame([(p,) for p in all_files], "source_file string")
-    try:
+    if os.path.exists(log_path):
         log_df = (
             spark.read.parquet(log_path)
             .select(F.regexp_replace("source_file", "^file://", "").alias("source_file"))
@@ -193,7 +195,7 @@ def ingest_incremental(
         # No broadcast hint: the log (right/build side) is the unbounded
         # side at scale; let AQE pick broadcast only while it stays small.
         fresh = candidates.join(log_df, "source_file", "left_anti")
-    except Exception:  # log doesn't exist yet: first run
+    else:  # first run
         fresh = candidates
     # Driver-side materialization, by design and bounded: this is PATH
     # METADATA (one short string per fresh file), not data — the same

@@ -6,7 +6,7 @@ onto tiny real files — no mocks, the actual Spark path.
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import date, datetime, timedelta
 from pathlib import Path
 
 import pytest
@@ -96,3 +96,31 @@ def test_read_bars_explicit_paths(spark, tmp_path):
     one = read_bars(spark, str(tmp_path), paths=[str(tmp_path / "btcusd-2012-01-22.csv")])
     assert one.count() == 1
     assert read_bars(spark, str(tmp_path), paths=[]).count() == 0
+
+
+def test_explicit_paths_start_no_listing_job(spark, tmp_path):
+    """More than 32 explicit paths are listed on the driver in local mode
+    (``get_spark`` raises the parallel-discovery threshold): building the
+    plan starts no job until an action runs."""
+    paths = []
+    for day in range(40):
+        name = f"btcusd-{date(2012, 1, 1) + timedelta(days=day)}.csv"
+        _write(tmp_path, name, ["00:00:00,1,2,0.5,1.5,10,15,1.5"])
+        paths.append(str(tmp_path / name))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group):
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return tracker.getJobIdsForGroup(group)
+
+    sc.setJobGroup("listing-build", "ingest_bars plan")
+    try:
+        df = ingest_bars(spark, str(tmp_path), paths=paths)
+        assert jobs("listing-build") == []
+        sc.setJobGroup("listing-action", "ingest_bars count")
+        assert df.count() == 40
+        assert jobs("listing-action")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -9,6 +9,8 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 
 from python_btc_etl_spark.sources.csv_bars import (
     ingest_bars,
@@ -76,3 +78,20 @@ def test_ingest_incremental_empty_landing_dir_is_noop(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
     assert ingest_incremental(spark, str(src), str(tmp_path / "table"), str(tmp_path / "log")) == (0, 0)
+
+
+def test_unreadable_ingest_log_raises_and_ingests_nothing(spark, tmp_path, bar_days):
+    """A log that exists but cannot be read is an error: the corpus is
+    not silently ingested a second time."""
+    src = tmp_path / "in"
+    src.mkdir()
+    for n in ["btcusd-2012-03-01.csv", "btcusd-2012-03-02.csv"]:
+        shutil.copy(bar_days / n, src / n)
+    table = str(tmp_path / "table")
+    log = tmp_path / "log"
+    _, rows = ingest_incremental(spark, str(src), table, str(log))
+    part = next(log.glob("part-*.parquet"))
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises((Py4JJavaError, PySparkException)):
+        ingest_incremental(spark, str(src), table, str(log))
+    assert spark.read.parquet(table).count() == rows
